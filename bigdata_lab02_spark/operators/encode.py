@@ -8,8 +8,7 @@ COO doc-term count matrix via DistributedCache dictionary lookups.
 Spark-first choices:
 
 - **Stopword filter (P2)**: the list is tiny → an ``isin`` literal filter
-  (codegen'd, pushed below the shuffle). For large lists use
-  ``stopword_filter_join`` — a broadcast LEFT ANTI join.
+  (codegen'd, pushed below the shuffle).
 - **Dense sequential ids (P3/P4)**: the reference's single-reducer counter
   (``task1_1_1.java:121-135``) is a global-sort semantics. We express it as
   ``row_number()`` over a global ordering. An empty ``partitionBy`` window
@@ -41,14 +40,6 @@ def stopword_filter(tokens: DataFrame, stopwords: list[str], token_col: str = "t
     probe per row — no join, no shuffle, evaluated at the scan.
     """
     return tokens.where(~F.col(token_col).isin(stopwords))
-
-
-def stopword_filter_join(tokens: DataFrame, stopwords: DataFrame, token_col: str = "token") -> DataFrame:
-    """Broadcast LEFT ANTI join variant for dictionary-scale stopword sets."""
-    sw = stopwords.toDF("__sw")
-    return tokens.join(
-        F.broadcast(sw), tokens[token_col] == sw["__sw"], "left_anti"
-    )
 
 
 # ------------------------------------------------------------------ P3/P4

@@ -50,6 +50,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.sinks import journaled, require_committed
 from .curation import (
     mixture_sample,
     pack_sequences,
@@ -509,137 +510,138 @@ def persist_pretrain_artifacts(
         minhash_signatures,
         shingle_stream,
     )
-    from .retrieval import _write_journal
 
     if num_hashes % bands != 0:
         raise ValueError(f"num_hashes={num_hashes} not divisible by bands={bands}")
     extra = list(passthrough or [])
     spark = base_pages.sparkSession
-    _write_journal(spark, path, "pending")
+    with journaled(spark, path):
+        # --- URL tier: survivors carry norm_url for the fetched-URL set -
+        tier = url_filters(
+            base_pages,
+            suffixes,
+            blocklist=blocklist,
+            url_col=url_col,
+            id_col=id_col,
+            passthrough=[group_col, text_col, *extra],
+        )
+        surv = tier.where("url_keep").select(
+            id_col, group_col, text_col, "norm_url", *extra
+        ).localCheckpoint()  # fans out: urls, digests, corpus (3 writes)
 
-    # --- URL tier: survivors carry norm_url for the fetched-URL set -
-    tier = url_filters(
-        base_pages,
-        suffixes,
-        blocklist=blocklist,
-        url_col=url_col,
-        id_col=id_col,
-        passthrough=[group_col, text_col, *extra],
-    )
-    surv = tier.where("url_keep").select(
-        id_col, group_col, text_col, "norm_url", *extra
-    ).localCheckpoint()  # fans out: urls, digests, corpus (3 writes)
+        urls = surv.select("norm_url").withColumn(
+            "url_bucket", _md5_bucket(F.col("norm_url"), url_buckets)
+        )
+        urls.write.mode("overwrite").partitionBy("url_bucket").parquet(
+            f"{path}/urls"
+        )
+        digests = (
+            surv.select(F.md5(F.col(text_col)).alias("digest"))
+            .distinct()
+            .withColumn(
+                "digest_bucket", _md5_bucket(F.col("digest"), digest_buckets)
+            )
+        )
+        digests.write.mode("overwrite").partitionBy("digest_bucket").parquet(
+            f"{path}/digests"
+        )
 
-    urls = surv.select("norm_url").withColumn(
-        "url_bucket", _md5_bucket(F.col("norm_url"), url_buckets)
-    )
-    urls.write.mode("overwrite").partitionBy("url_bucket").parquet(
-        f"{path}/urls"
-    )
-    digests = (
-        surv.select(F.md5(F.col(text_col)).alias("digest"))
-        .distinct()
-        .withColumn("digest_bucket", _md5_bucket(F.col("digest"), digest_buckets))
-    )
-    digests.write.mode("overwrite").partitionBy("digest_bucket").parquet(
-        f"{path}/digests"
-    )
-
-    # --- exact-dedup survivors = the corpus artifact -----------------
-    w = Window.partitionBy(F.md5(F.col(text_col))).orderBy(id_col)
-    ex = (
-        surv.withColumn("__rn", F.row_number().over(w))
-        .where("__rn = 1")
-        .select(id_col, group_col, text_col, *extra)
-    )
-    ex.write.mode("overwrite").parquet(f"{path}/corpus")
-    # Downstream tiers read the corpus BACK from the layout (the tier
-    # boundary a production run would write anyway): bands, pairs and
-    # the trained model describe exactly what was written.
-    ex_rb = spark.read.schema(ex.schema).parquet(f"{path}/corpus")
-    # r17: ONE shingle+md5 pass over the written corpus, pinned, feeds
-    # BOTH the band artifact and the near-dup pair verification — the
-    # bands and the pairs previously each re-derived it (the pairs call
-    # even pinned its own second copy). Signatures from the shared
-    # stream are bit-identical (min over the same md5'd shingles), so
-    # the bands/ artifact and the drop set are unchanged (oracle-gated
-    # at 3 SFs; interleaved sf0.1 A/B receipt in OPTIMIZATION_r17.md).
-    shingled = shingle_stream(
-        ex_rb.select(id_col, text_col),
-        text_col=text_col,
-        id_col=id_col,
-        shingle_n=shingle_n,
-    ).localCheckpoint()
-    band_tbl = minhash_band_table(
-        minhash_signatures(
+        # --- exact-dedup survivors = the corpus artifact -----------------
+        w = Window.partitionBy(F.md5(F.col(text_col))).orderBy(id_col)
+        ex = (
+            surv.withColumn("__rn", F.row_number().over(w))
+            .where("__rn = 1")
+            .select(id_col, group_col, text_col, *extra)
+        )
+        ex.write.mode("overwrite").parquet(f"{path}/corpus")
+        # Downstream tiers read the corpus BACK from the layout (the tier
+        # boundary a production run would write anyway): bands, pairs and
+        # the trained model describe exactly what was written.
+        ex_rb = spark.read.schema(ex.schema).parquet(f"{path}/corpus")
+        # r17: ONE shingle+md5 pass over the written corpus, pinned, feeds
+        # BOTH the band artifact and the near-dup pair verification — the
+        # bands and the pairs previously each re-derived it (the pairs call
+        # even pinned its own second copy). Signatures from the shared
+        # stream are bit-identical (min over the same md5'd shingles), so
+        # the bands/ artifact and the drop set are unchanged (oracle-gated
+        # at 3 SFs; interleaved sf0.1 A/B receipt in OPTIMIZATION_r17.md).
+        shingled = shingle_stream(
+            ex_rb.select(id_col, text_col),
+            text_col=text_col,
+            id_col=id_col,
+            shingle_n=shingle_n,
+        ).localCheckpoint()
+        band_tbl = minhash_band_table(
+            minhash_signatures(
+                ex_rb.select(id_col, text_col),
+                text_col=text_col,
+                id_col=id_col,
+                num_hashes=num_hashes,
+                shingle_n=shingle_n,
+                shingled=shingled,
+            ),
+            id_col=id_col,
+            bands=bands,
+            rows_per_band=num_hashes // bands,
+        )
+        band_tbl.write.mode("overwrite").partitionBy("band_id").parquet(
+            f"{path}/bands"
+        )
+        drops = minhash_dedup_pairs(
             ex_rb.select(id_col, text_col),
             text_col=text_col,
             id_col=id_col,
             num_hashes=num_hashes,
             shingle_n=shingle_n,
+            bands=bands,
+            threshold=minhash_threshold,
             shingled=shingled,
-        ),
-        id_col=id_col,
-        bands=bands,
-        rows_per_band=num_hashes // bands,
-    )
-    band_tbl.write.mode("overwrite").partitionBy("band_id").parquet(
-        f"{path}/bands"
-    )
-    drops = minhash_dedup_pairs(
-        ex_rb.select(id_col, text_col),
-        text_col=text_col,
-        id_col=id_col,
-        num_hashes=num_hashes,
-        shingle_n=shingle_n,
-        bands=bands,
-        threshold=minhash_threshold,
-        shingled=shingled,
-    ).select(F.col("id_b").alias(id_col))
-    nd = ex_rb.join(drops, id_col, "left_anti")
-    model = quality_classifier_train(
-        nd, positive, text_col=text_col, id_col=id_col, n_buckets=n_buckets
-    )
-    model.write.mode("overwrite").parquet(f"{path}/model")
+        ).select(F.col("id_b").alias(id_col))
+        nd = ex_rb.join(drops, id_col, "left_anti")
+        model = quality_classifier_train(
+            nd, positive, text_col=text_col, id_col=id_col, n_buckets=n_buckets
+        )
+        model.write.mode("overwrite").parquet(f"{path}/model")
 
-    # --- one-row stats: counts from read-backs, policy frozen --------
-    stats = (
-        base_pages.agg(
-            F.coalesce(F.max(id_col).cast("long"), F.lit(-1)).alias("max_id")
+        # --- one-row stats: counts from read-backs, policy frozen --------
+        stats = (
+            base_pages.agg(
+                F.coalesce(F.max(id_col).cast("long"), F.lit(-1)).alias(
+                    "max_id"
+                )
+            )
+            .crossJoin(ex_rb.agg(F.count(F.lit(1)).alias("n_corpus")))
+            .crossJoin(
+                spark.read.schema(urls.schema)
+                .parquet(f"{path}/urls")
+                .agg(F.count(F.lit(1)).alias("n_urls"))
+            )
+            .crossJoin(
+                spark.read.schema(digests.schema)
+                .parquet(f"{path}/digests")
+                .agg(F.count(F.lit(1)).alias("n_digests"))
+            )
+            .crossJoin(
+                spark.read.schema(band_tbl.schema)
+                .parquet(f"{path}/bands")
+                .agg(F.count(F.lit(1)).alias("n_bands"))
+            )
+            .select(
+                "max_id",
+                "n_corpus",
+                "n_urls",
+                "n_digests",
+                "n_bands",
+                F.lit(minhash_threshold).cast("double").alias("threshold"),
+                F.lit(num_hashes).cast("int").alias("num_hashes"),
+                F.lit(shingle_n).cast("int").alias("shingle_n"),
+                F.lit(bands).cast("int").alias("bands"),
+                F.lit(n_buckets).cast("int").alias("n_buckets"),
+                F.lit(url_buckets).cast("int").alias("url_buckets"),
+                F.lit(digest_buckets).cast("int").alias("digest_buckets"),
+            )
         )
-        .crossJoin(ex_rb.agg(F.count(F.lit(1)).alias("n_corpus")))
-        .crossJoin(
-            spark.read.schema(urls.schema)
-            .parquet(f"{path}/urls")
-            .agg(F.count(F.lit(1)).alias("n_urls"))
-        )
-        .crossJoin(
-            spark.read.schema(digests.schema)
-            .parquet(f"{path}/digests")
-            .agg(F.count(F.lit(1)).alias("n_digests"))
-        )
-        .crossJoin(
-            spark.read.schema(band_tbl.schema)
-            .parquet(f"{path}/bands")
-            .agg(F.count(F.lit(1)).alias("n_bands"))
-        )
-        .select(
-            "max_id",
-            "n_corpus",
-            "n_urls",
-            "n_digests",
-            "n_bands",
-            F.lit(minhash_threshold).cast("double").alias("threshold"),
-            F.lit(num_hashes).cast("int").alias("num_hashes"),
-            F.lit(shingle_n).cast("int").alias("shingle_n"),
-            F.lit(bands).cast("int").alias("bands"),
-            F.lit(n_buckets).cast("int").alias("n_buckets"),
-            F.lit(url_buckets).cast("int").alias("url_buckets"),
-            F.lit(digest_buckets).cast("int").alias("digest_buckets"),
-        )
-    )
-    stats.coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
-    _write_journal(spark, path, "committed")
+        stats.coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
 
 
 def check_pretrain_artifacts(spark, path: str, deep: bool = False) -> dict:
@@ -651,20 +653,11 @@ def check_pretrain_artifacts(spark, path: str, deep: bool = False) -> dict:
     stats row — catches corruption the journal can't see. Returns the
     stats row as a dict. Recovery from a failed update is REBUILD:
     re-running an update would double-append its shard."""
-    try:
-        jrows = spark.read.parquet(f"{path}/journal").collect()
-    except Exception as exc:
-        raise ValueError(
-            f"pretrain artifacts at {path}: journal unreadable ({exc}); "
-            "treat the layout as unbuilt and rebuild"
-        ) from None
-    if len(jrows) != 1 or jrows[0]["state"] != "committed":
-        raise ValueError(
-            f"pretrain artifacts at {path}: journal reads "
-            f"{[r['state'] for r in jrows]} != ['committed'] — an update "
-            "crashed mid-flight; rebuild (persist_pretrain_artifacts) "
-            "before absorbing another shard"
-        )
+    require_committed(
+        spark, path, "pretrain artifacts",
+        "rebuild (persist_pretrain_artifacts) before absorbing another "
+        "shard",
+    )
     srows = spark.read.parquet(f"{path}/stats").collect()
     if len(srows) != 1:
         raise ValueError(
@@ -742,7 +735,6 @@ def update_pretrain_artifacts(
     ``pretrain_shard_increment`` over the same artifacts (the gate
     shares its oracle: the layout must be invisible in results)."""
     from .dedup import minhash_band_table, minhash_signatures
-    from .retrieval import _write_journal
 
     spark = new_pages.sparkSession
     st = check_pretrain_artifacts(spark, path)
@@ -842,70 +834,71 @@ def update_pretrain_artifacts(
     # against the post-append file index.
     out = out.localCheckpoint(eager=True)
 
-    _write_journal(spark, path, "pending")
-    new_urls = surv.select("norm_url").withColumn(
-        "url_bucket", _md5_bucket(F.col("norm_url"), st["url_buckets"])
-    )
-    new_urls.write.mode("append").partitionBy("url_bucket").parquet(
-        f"{path}/urls"
-    )
-    fresh = ex.where(~F.col("dup_of_index"))  # ex is checkpointed
-    fresh.select("digest").withColumn(
-        "digest_bucket", _md5_bucket(F.col("digest"), st["digest_buckets"])
-    ).write.mode("append").partitionBy("digest_bucket").parquet(
-        f"{path}/digests"
-    )
-    fresh.select(id_col, group_col, text_col, *extra).write.mode(
-        "append"
-    ).parquet(f"{path}/corpus")
-    new_bands = minhash_band_table(
-        minhash_signatures(
-            fresh.select(id_col, text_col),
-            text_col=text_col,
-            id_col=id_col,
-            num_hashes=st["num_hashes"],
-            shingle_n=st["shingle_n"],
-        ),
-        id_col=id_col,
-        bands=st["bands"],
-        rows_per_band=st["num_hashes"] // st["bands"],
-    ).localCheckpoint()  # consumed twice: the append + the stats count
-    new_bands.write.mode("append").partitionBy("band_id").parquet(
-        f"{path}/bands"
-    )
-
-    # --- stats flip: old counts + shard-sized aggregates (all from
-    #     pinned frames), built JVM-side ------------------------------
-    new_max = max(probe["hi"], max_id) if probe["n"] > 0 else max_id
-    stats = (
-        surv.agg(F.count(F.lit(1)).alias("__d_urls"))
-        .crossJoin(fresh.agg(F.count(F.lit(1)).alias("__d_corpus")))
-        .crossJoin(new_bands.agg(F.count(F.lit(1)).alias("__d_bands")))
-        .select(
-            F.lit(new_max).cast("long").alias("max_id"),
-            (F.lit(st["n_corpus"]) + F.col("__d_corpus"))
-            .cast("long")
-            .alias("n_corpus"),
-            (F.lit(st["n_urls"]) + F.col("__d_urls"))
-            .cast("long")
-            .alias("n_urls"),
-            (F.lit(st["n_digests"]) + F.col("__d_corpus"))
-            .cast("long")
-            .alias("n_digests"),
-            (F.lit(st["n_bands"]) + F.col("__d_bands"))
-            .cast("long")
-            .alias("n_bands"),
-            F.lit(st["threshold"]).cast("double").alias("threshold"),
-            F.lit(st["num_hashes"]).cast("int").alias("num_hashes"),
-            F.lit(st["shingle_n"]).cast("int").alias("shingle_n"),
-            F.lit(st["bands"]).cast("int").alias("bands"),
-            F.lit(st["n_buckets"]).cast("int").alias("n_buckets"),
-            F.lit(st["url_buckets"]).cast("int").alias("url_buckets"),
-            F.lit(st["digest_buckets"]).cast("int").alias("digest_buckets"),
+    with journaled(spark, path):
+        new_urls = surv.select("norm_url").withColumn(
+            "url_bucket", _md5_bucket(F.col("norm_url"), st["url_buckets"])
         )
-    )
-    stats.coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
-    _write_journal(spark, path, "committed")
+        new_urls.write.mode("append").partitionBy("url_bucket").parquet(
+            f"{path}/urls"
+        )
+        fresh = ex.where(~F.col("dup_of_index"))  # ex is checkpointed
+        fresh.select("digest").withColumn(
+            "digest_bucket", _md5_bucket(F.col("digest"), st["digest_buckets"])
+        ).write.mode("append").partitionBy("digest_bucket").parquet(
+            f"{path}/digests"
+        )
+        fresh.select(id_col, group_col, text_col, *extra).write.mode(
+            "append"
+        ).parquet(f"{path}/corpus")
+        new_bands = minhash_band_table(
+            minhash_signatures(
+                fresh.select(id_col, text_col),
+                text_col=text_col,
+                id_col=id_col,
+                num_hashes=st["num_hashes"],
+                shingle_n=st["shingle_n"],
+            ),
+            id_col=id_col,
+            bands=st["bands"],
+            rows_per_band=st["num_hashes"] // st["bands"],
+        ).localCheckpoint()  # consumed twice: the append + the stats count
+        new_bands.write.mode("append").partitionBy("band_id").parquet(
+            f"{path}/bands"
+        )
+
+        # --- stats flip: old counts + shard-sized aggregates (all from
+        #     pinned frames), built JVM-side ------------------------------
+        new_max = max(probe["hi"], max_id) if probe["n"] > 0 else max_id
+        stats = (
+            surv.agg(F.count(F.lit(1)).alias("__d_urls"))
+            .crossJoin(fresh.agg(F.count(F.lit(1)).alias("__d_corpus")))
+            .crossJoin(new_bands.agg(F.count(F.lit(1)).alias("__d_bands")))
+            .select(
+                F.lit(new_max).cast("long").alias("max_id"),
+                (F.lit(st["n_corpus"]) + F.col("__d_corpus"))
+                .cast("long")
+                .alias("n_corpus"),
+                (F.lit(st["n_urls"]) + F.col("__d_urls"))
+                .cast("long")
+                .alias("n_urls"),
+                (F.lit(st["n_digests"]) + F.col("__d_corpus"))
+                .cast("long")
+                .alias("n_digests"),
+                (F.lit(st["n_bands"]) + F.col("__d_bands"))
+                .cast("long")
+                .alias("n_bands"),
+                F.lit(st["threshold"]).cast("double").alias("threshold"),
+                F.lit(st["num_hashes"]).cast("int").alias("num_hashes"),
+                F.lit(st["shingle_n"]).cast("int").alias("shingle_n"),
+                F.lit(st["bands"]).cast("int").alias("bands"),
+                F.lit(st["n_buckets"]).cast("int").alias("n_buckets"),
+                F.lit(st["url_buckets"]).cast("int").alias("url_buckets"),
+                F.lit(st["digest_buckets"])
+                .cast("int")
+                .alias("digest_buckets"),
+            )
+        )
+        stats.coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
     return out
 
 
@@ -944,29 +937,26 @@ def write_training_shards(
     (task1_1.java:187-192) — the tier boundary written for the next
     consumer, here with the shard/manifest contract a 100 TB training
     run needs."""
-    from .retrieval import _write_journal
-
     if packs_per_shard <= 0:
         raise ValueError(f"packs_per_shard={packs_per_shard} must be positive")
     spark = packed.sparkSession
-    _write_journal(spark, path, "pending")
-    rows = packed.withColumn(
-        "shard_id",
-        F.expr(f"{pack_col} div {packs_per_shard}").cast("int"),
-    ).repartition(group_col, "shard_id")
-    rows.write.mode("overwrite").partitionBy(group_col, "shard_id").parquet(
-        f"{path}/shards"
-    )
-    back = spark.read.schema(rows.schema).parquet(f"{path}/shards")
-    manifest = back.groupBy(group_col, "shard_id").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.countDistinct(pack_col).alias("n_packs"),
-        F.sum(tokens_col).cast("long").alias("n_tokens"),
-        F.min(id_col).cast("long").alias("min_id"),
-        F.max(id_col).cast("long").alias("max_id"),
-    )
-    manifest.write.mode("overwrite").parquet(f"{path}/manifest")
-    _write_journal(spark, path, "committed")
+    with journaled(spark, path):
+        rows = packed.withColumn(
+            "shard_id",
+            F.expr(f"{pack_col} div {packs_per_shard}").cast("int"),
+        ).repartition(group_col, "shard_id")
+        rows.write.mode("overwrite").partitionBy(
+            group_col, "shard_id"
+        ).parquet(f"{path}/shards")
+        back = spark.read.schema(rows.schema).parquet(f"{path}/shards")
+        manifest = back.groupBy(group_col, "shard_id").agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.countDistinct(pack_col).alias("n_packs"),
+            F.sum(tokens_col).cast("long").alias("n_tokens"),
+            F.min(id_col).cast("long").alias("min_id"),
+            F.max(id_col).cast("long").alias("max_id"),
+        )
+        manifest.write.mode("overwrite").parquet(f"{path}/manifest")
 
 
 def check_training_shards(spark, path: str, deep: bool = False) -> dict:
@@ -976,19 +966,9 @@ def check_training_shards(spark, path: str, deep: bool = False) -> dict:
     ``deep=True`` recounts the shard files against the manifest totals
     (one columnar pass) — catches a manifest/shards skew the journal
     can't see."""
-    try:
-        jrows = spark.read.parquet(f"{path}/journal").collect()
-    except Exception as exc:
-        raise ValueError(
-            f"training shards at {path}: journal unreadable ({exc}); "
-            "treat the layout as unbuilt and rewrite"
-        ) from None
-    if len(jrows) != 1 or jrows[0]["state"] != "committed":
-        raise ValueError(
-            f"training shards at {path}: journal reads "
-            f"{[r['state'] for r in jrows]} != ['committed'] — a write "
-            "crashed mid-flight; rewrite (write_training_shards)"
-        )
+    require_committed(
+        spark, path, "training shards", "rewrite (write_training_shards)"
+    )
     tot = (
         spark.read.parquet(f"{path}/manifest")
         .agg(

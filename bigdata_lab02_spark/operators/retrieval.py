@@ -61,6 +61,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens_column
+from ..sources.sinks import journaled, require_committed
 
 _MU = 1_000_000
 
@@ -322,55 +323,36 @@ def persist_bm25_index(
     'committed' journal in place, making the mixed layout look
     committed to ``check_bm25_index`` — the rebuild recovery path
     must itself be crash-detectable."""
-    _write_journal(docs.sparkSession, path, "pending")
-    toks = docs.select(
-        F.col(id_col),
-        F.explode(tokens_column(F.col(text_col))).alias("term"),
-    )
-    postings = (
-        toks.groupBy(id_col, "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .withColumn("term_bucket", _term_bucket_col(F.col("term"), n_buckets))
-    )
-    # Cluster rows by their hive partition before the partitioned write
-    # (guide-§6 small-files rule, the write_training_shards pattern):
-    # without it every write task sprays one file into every bucket
-    # directory it holds — tasks × n_buckets tiny files whose open/list
-    # cost every later read-back and pruned query pays. One hash
-    # exchange of the postings buys one file per bucket.
-    postings.repartition("term_bucket").write.mode("overwrite").partitionBy(
-        "term_bucket"
-    ).parquet(f"{path}/postings")
-    dl = docs.select(
-        F.col(id_col), F.size(tokens_column(F.col(text_col))).alias("dl")
-    )
-    dl.write.mode("overwrite").parquet(f"{path}/doclen")
-    dl.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.coalesce(F.sum("dl"), F.lit(0)).alias("sum_dl"),
-    ).write.mode("overwrite").parquet(f"{path}/stats")
-    _write_journal(docs.sparkSession, path, "committed")
-
-
-def _write_journal(spark, path: str, state: str) -> None:
-    """One-row commit journal for the index layout — 'pending' is
-    written before any mutating job of an update, 'committed' after
-    the stats flip, so a crash or task-retry storm anywhere in
-    between leaves a journal that says so (or a half-written journal
-    dir, which reads as the same thing). Spark-native one-row parquet
-    overwrite: FS-agnostic, no private JVM filesystem APIs.
-
-    Built JVM-side (range(1) + lit), NEVER from a Python local list:
-    a ``createDataFrame([...])`` one-row write runs the job over a
-    Python-RDD-backed plan and pays a Python-worker round-trip per
-    write — measured ~4.5 s vs 0.2 s for the JVM plan (r15 A/B,
-    BENCHNOTES), which was the entire r14 bm25 bench regression
-    (2 journal writes per persist, 4 per persist+update)."""
-    if state not in ("pending", "committed"):
-        raise ValueError(f"journal state must be pending/committed: {state}")
-    spark.range(1).select(F.lit(state).alias("state")).coalesce(
-        1
-    ).write.mode("overwrite").parquet(f"{path}/journal")
+    with journaled(docs.sparkSession, path):
+        toks = docs.select(
+            F.col(id_col),
+            F.explode(tokens_column(F.col(text_col))).alias("term"),
+        )
+        postings = (
+            toks.groupBy(id_col, "term")
+            .agg(F.count(F.lit(1)).alias("tf"))
+            .withColumn(
+                "term_bucket", _term_bucket_col(F.col("term"), n_buckets)
+            )
+        )
+        # Cluster rows by their hive partition before the partitioned
+        # write (guide-§6 small-files rule, the write_training_shards
+        # pattern): without it every write task sprays one file into
+        # every bucket directory it holds — tasks × n_buckets tiny files
+        # whose open/list cost every later read-back and pruned query
+        # pays. One hash exchange of the postings buys one file per
+        # bucket.
+        postings.repartition("term_bucket").write.mode(
+            "overwrite"
+        ).partitionBy("term_bucket").parquet(f"{path}/postings")
+        dl = docs.select(
+            F.col(id_col), F.size(tokens_column(F.col(text_col))).alias("dl")
+        )
+        dl.write.mode("overwrite").parquet(f"{path}/doclen")
+        dl.agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.coalesce(F.sum("dl"), F.lit(0)).alias("sum_dl"),
+        ).write.mode("overwrite").parquet(f"{path}/stats")
 
 
 def check_bm25_index(spark, path: str, deep: bool = False) -> dict:
@@ -391,20 +373,10 @@ def check_bm25_index(spark, path: str, deep: bool = False) -> dict:
     (``persist_bm25_index`` over the full corpus): re-running the
     update is unsafe — its appends may have landed, and appending
     twice double-counts the shard."""
-    try:
-        jrows = spark.read.parquet(f"{path}/journal").collect()
-    except Exception as exc:
-        raise ValueError(
-            f"bm25 index at {path}: journal unreadable ({exc}) — "
-            "crashed update or pre-journal layout; rebuild"
-        ) from None
-    if len(jrows) != 1 or jrows[0]["state"] != "committed":
-        states = [r["state"] for r in jrows]
-        raise ValueError(
-            f"bm25 index at {path}: journal says {states!r}, not "
-            "['committed'] — an update crashed mid-flight; rebuild "
-            "(re-running the update would double-append)"
-        )
+    require_committed(
+        spark, path, "bm25 index",
+        "rebuild (re-running the update would double-append)",
+    )
     n_docs, sum_dl = (
         spark.read.parquet(f"{path}/stats").select("n_docs", "sum_dl").first()
     )
@@ -516,38 +488,41 @@ def update_bm25_index(
     it would double-append the shard. ``n_buckets`` must match the
     layout's."""
     spark = new_docs.sparkSession
-    _write_journal(spark, path, "pending")
-    toks = new_docs.select(
-        F.col(id_col),
-        F.explode(tokens_column(F.col(text_col))).alias("term"),
-    )
-    postings = (
-        toks.groupBy(id_col, "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .withColumn("term_bucket", _term_bucket_col(F.col("term"), n_buckets))
-    )
-    # Same bucket-clustered write as persist (guide-§6 small-files
-    # rule): the append would otherwise spray tasks × n_buckets files.
-    postings.repartition("term_bucket").write.mode("append").partitionBy(
-        "term_bucket"
-    ).parquet(f"{path}/postings")
-    dl = new_docs.select(
-        F.col(id_col), F.size(tokens_column(F.col(text_col))).alias("dl")
-    )
-    dl.write.mode("append").parquet(f"{path}/doclen")
-    old_n, old_sd = (
-        spark.read.parquet(f"{path}/stats").select("n_docs", "sum_dl").first()
-    )
-    add_n, add_sd = dl.agg(
-        F.count(F.lit(1)), F.coalesce(F.sum("dl"), F.lit(0))
-    ).first()
-    # JVM-side one-row frame (the _write_journal lesson above) — the
-    # Python-local-list form pays a Python-worker round-trip per write.
-    spark.range(1).select(
-        F.lit(int(old_n) + int(add_n)).cast("long").alias("n_docs"),
-        F.lit(int(old_sd) + int(add_sd)).cast("long").alias("sum_dl"),
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
-    _write_journal(spark, path, "committed")
+    with journaled(spark, path):
+        toks = new_docs.select(
+            F.col(id_col),
+            F.explode(tokens_column(F.col(text_col))).alias("term"),
+        )
+        postings = (
+            toks.groupBy(id_col, "term")
+            .agg(F.count(F.lit(1)).alias("tf"))
+            .withColumn(
+                "term_bucket", _term_bucket_col(F.col("term"), n_buckets)
+            )
+        )
+        # Same bucket-clustered write as persist (guide-§6 small-files
+        # rule): the append would otherwise spray tasks × n_buckets files.
+        postings.repartition("term_bucket").write.mode("append").partitionBy(
+            "term_bucket"
+        ).parquet(f"{path}/postings")
+        dl = new_docs.select(
+            F.col(id_col), F.size(tokens_column(F.col(text_col))).alias("dl")
+        )
+        dl.write.mode("append").parquet(f"{path}/doclen")
+        old_n, old_sd = (
+            spark.read.parquet(f"{path}/stats")
+            .select("n_docs", "sum_dl")
+            .first()
+        )
+        add_n, add_sd = dl.agg(
+            F.count(F.lit(1)), F.coalesce(F.sum("dl"), F.lit(0))
+        ).first()
+        # JVM-side one-row frame (the sinks.journaled lesson) — the
+        # Python-local-list form pays a Python-worker round-trip per write.
+        spark.range(1).select(
+            F.lit(int(old_n) + int(add_n)).cast("long").alias("n_docs"),
+            F.lit(int(old_sd) + int(add_sd)).cast("long").alias("sum_dl"),
+        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
 
 
 def rrf_fuse(

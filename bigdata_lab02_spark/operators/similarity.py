@@ -31,6 +31,7 @@ from bigdata_lab02_spark.functions.vectors import (
     array_norm,
     as_double_array,
 )
+from bigdata_lab02_spark.sources.sinks import journaled, require_committed
 
 
 def cosine_topk(
@@ -767,27 +768,24 @@ def persist_semantic_assignments(
     (possibly non-deterministic) input — so the guard's max_id always
     describes what was actually written; an empty input persists
     ``max_id = -1`` rather than NULL."""
-    from .retrieval import _write_journal
-
     spark = indexed.sparkSession
-    _write_journal(spark, path, "pending")
-    rows = indexed.select(
-        F.col(id_col),
-        F.col(cluster_col).alias("cluster_id"),
-        as_double_array(F.col(vec_col)).alias("v"),
-    )
-    rows.write.mode("overwrite").partitionBy("cluster_id").parquet(
-        f"{path}/assignments"
-    )
-    # Explicit schema: an empty input writes no data files, and the
-    # read-back must still produce the (0, -1) stats row.
-    spark.read.schema(rows.schema).parquet(f"{path}/assignments").agg(
-        F.coalesce(F.max(id_col).cast("long"), F.lit(-1)).alias(
-            "max_id"
-        ),
-        F.count(F.lit(1)).alias("n_rows"),
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
-    _write_journal(spark, path, "committed")
+    with journaled(spark, path):
+        rows = indexed.select(
+            F.col(id_col),
+            F.col(cluster_col).alias("cluster_id"),
+            as_double_array(F.col(vec_col)).alias("v"),
+        )
+        rows.write.mode("overwrite").partitionBy("cluster_id").parquet(
+            f"{path}/assignments"
+        )
+        # Explicit schema: an empty input writes no data files, and the
+        # read-back must still produce the (0, -1) stats row.
+        spark.read.schema(rows.schema).parquet(f"{path}/assignments").agg(
+            F.coalesce(F.max(id_col).cast("long"), F.lit(-1)).alias(
+                "max_id"
+            ),
+            F.count(F.lit(1)).alias("n_rows"),
+        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
 
 
 def update_semantic_assignments(
@@ -819,8 +817,6 @@ def update_semantic_assignments(
 
     Returns the shard's (id, cluster, keep) decisions — union with the
     previously returned decisions to reproduce the full rebuild."""
-    from .retrieval import _write_journal
-
     spark = new_vectors.sparkSession
     st = check_semantic_assignments(spark, path)
     # Layouts persisted before the empty-input fix can carry a NULL
@@ -886,21 +882,20 @@ def update_semantic_assignments(
     # recompute the whole incremental dedup against a file-index
     # snapshot of assignments/ that the append just changed.
     out = out.localCheckpoint(eager=True)
-    _write_journal(spark, path, "pending")
-    shard.join(out.select(id_col, "cluster_id"), id_col).select(
-        id_col, "cluster_id", "v"
-    ).write.mode("append").partitionBy("cluster_id").parquet(
-        f"{path}/assignments"
-    )
-    # JVM-side one-row frame (the _write_journal lesson, r15): a
-    # Python-local-list frame pays a ~4.5 s Python-worker round-trip
-    # per write.
-    new_max = max(probe["hi"], max_id) if probe["n"] > 0 else max_id
-    spark.range(1).select(
-        F.lit(new_max).cast("long").alias("max_id"),
-        F.lit(st["n_rows"] + probe["n"]).cast("long").alias("n_rows"),
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
-    _write_journal(spark, path, "committed")
+    with journaled(spark, path):
+        shard.join(out.select(id_col, "cluster_id"), id_col).select(
+            id_col, "cluster_id", "v"
+        ).write.mode("append").partitionBy("cluster_id").parquet(
+            f"{path}/assignments"
+        )
+        # JVM-side one-row frame (the sinks.journaled lesson): a
+        # Python-local-list frame pays a ~4.5 s Python-worker round-trip
+        # per write.
+        new_max = max(probe["hi"], max_id) if probe["n"] > 0 else max_id
+        spark.range(1).select(
+            F.lit(new_max).cast("long").alias("max_id"),
+            F.lit(st["n_rows"] + probe["n"]).cast("long").alias("n_rows"),
+        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
     return out
 
 
@@ -913,21 +908,11 @@ def check_semantic_assignments(spark, path: str, deep: bool = False) -> dict:
     ``assignments/`` against the stats row (one columnar pass) —
     catches corruption the journal can't see (manual layout edits, a
     lost stats overwrite)."""
-    try:
-        jrows = spark.read.parquet(f"{path}/journal").collect()
-    except Exception as exc:
-        raise ValueError(
-            f"semantic index at {path}: journal unreadable ({exc}); "
-            "treat the layout as unbuilt and rebuild"
-        ) from None
-    if len(jrows) != 1 or jrows[0]["state"] != "committed":
-        raise ValueError(
-            f"semantic index at {path}: journal reads "
-            f"{[r['state'] for r in jrows]} != ['committed'] — an "
-            "update crashed mid-flight; rebuild "
-            "(persist_semantic_assignments) before querying or "
-            "appending"
-        )
+    require_committed(
+        spark, path, "semantic index",
+        "rebuild (persist_semantic_assignments) before querying or "
+        "appending",
+    )
     srow = spark.read.parquet(f"{path}/stats").collect()
     if len(srow) != 1:
         raise ValueError(

@@ -35,13 +35,6 @@ class TfIdfPipeline:
     corpus: DataFrame
     stopwords: list[str] = field(default_factory=list)
     min_count: int = 3
-    cache_token_counts: bool = True
-    #: dense-id strategy for the dictionaries. True (default) uses the
-    #: range-partitioned two-level rank — same ids, no single-partition
-    #: global window, so dictionary assignment stays distributed when the
-    #: vocabulary itself is big data. False keeps the one-task row_number
-    #: (marginally fewer stages for toy vocabularies).
-    scalable: bool = True
 
     def __post_init__(self) -> None:
         self._coo: DataFrame | None = None
@@ -65,23 +58,24 @@ class TfIdfPipeline:
         matrix both derive from this (cached) aggregate."""
         if self._tok_counts is None:
             tc = self.tokens().groupBy("doc", "token").agg(F.count("*").alias("count"))
-            self._tok_counts = tc.cache() if self.cache_token_counts else tc
+            self._tok_counts = tc.cache()
         return self._tok_counts
 
     def term_dict(self) -> DataFrame:
         # distinct tokens of the aggregate == distinct raw tokens, so the
-        # dense ids are identical to a raw-token dictionary (golden-checked)
+        # dense ids are identical to a raw-token dictionary (golden-checked).
+        # scalable=True: the range-partitioned two-level rank gives the
+        # same ids as a one-task row_number but keeps assignment
+        # distributed when the vocabulary itself is big data.
         if self._term_dict is None:
             self._term_dict = encode.build_term_dict(
-                self.token_counts(), scalable=self.scalable
+                self.token_counts(), scalable=True
             )
         return self._term_dict
 
     def doc_dict(self) -> DataFrame:
         if self._doc_dict is None:
-            self._doc_dict = encode.build_doc_dict(
-                self.corpus, scalable=self.scalable
-            )
+            self._doc_dict = encode.build_doc_dict(self.corpus, scalable=True)
         return self._doc_dict
 
     def doc_term_matrix(self) -> DataFrame:
@@ -97,9 +91,7 @@ class TfIdfPipeline:
         if self._filtered is None:
             self._filtered = matrix.frequency_filter(
                 self.doc_term_matrix(), self.min_count
-            )
-            if self.cache_token_counts:
-                self._filtered = self._filtered.cache()
+            ).cache()
         return self._filtered
 
     def top_terms(self, k: int = 10) -> DataFrame:

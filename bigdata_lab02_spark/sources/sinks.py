@@ -16,6 +16,8 @@ from __future__ import annotations
 
 import re
 import shutil
+from collections.abc import Iterator
+from contextlib import contextmanager
 from pathlib import Path
 
 from pyspark.sql import DataFrame
@@ -142,6 +144,47 @@ def write_bucketed(
     if sort_cols:
         w = w.sortBy(*sort_cols)
     w.saveAsTable(table_name)
+
+
+@contextmanager
+def journaled(spark, path: str) -> Iterator[None]:
+    """Commit journal for a multi-write layout under ``path``: writes
+    'pending' to ``journal/`` before the body's first mutating write and
+    'committed' after the body returns. A crash or task-retry storm in
+    between leaves 'pending' (or a half-written journal dir, which reads
+    the same), and ``require_committed`` refuses the layout.
+
+    The one-row overwrite is built JVM-side (range(1) + lit), never from
+    a Python local list: ``createDataFrame([...])`` pays a Python-worker
+    round-trip per write, measured ~4.5 s vs 0.2 s (BENCHNOTES)."""
+
+    def mark(state: str) -> None:
+        spark.range(1).select(F.lit(state).alias("state")).coalesce(
+            1
+        ).write.mode("overwrite").parquet(f"{path}/journal")
+
+    mark("pending")
+    yield
+    mark("committed")
+
+
+def require_committed(spark, path: str, what: str, remedy: str) -> None:
+    """Raise ValueError unless the ``journaled`` layout at ``path`` reads
+    back exactly one 'committed' row. ``what`` names the layout in the
+    message and ``remedy`` says how to recover."""
+    try:
+        rows = spark.read.parquet(f"{path}/journal").collect()
+    except Exception as exc:
+        raise ValueError(
+            f"{what} at {path}: journal unreadable ({exc}) — unbuilt, "
+            f"pre-journal or crashed layout; {remedy}"
+        ) from None
+    states = [r["state"] for r in rows]
+    if states != ["committed"]:
+        raise ValueError(
+            f"{what} at {path}: journal reads {states} != ['committed'] "
+            f"— a write crashed mid-flight; {remedy}"
+        )
 
 
 def write_multi(outputs: dict[str, DataFrame], root: str, fmt: str = "parquet") -> None:

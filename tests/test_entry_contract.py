@@ -113,6 +113,20 @@ def test_queries_and_oracles_align():
     assert missing == entrymod.ROWS_ONLY, f"undeclared rows-only queries: {missing}"
 
 
+def test_gate_rows_are_unique_and_have_oracles():
+    """GATES is a tuple, so it can hold a name twice, and queries() would
+    then keep one of the two rows without a sound."""
+    names = [g.name for g in entrymod.GATES]
+    dup = sorted({n for n in names if names.count(n) > 1})
+    assert not dup, f"gate names registered twice: {dup}"
+    bad = [
+        g.name
+        for g in entrymod.GATES
+        if not isinstance(g.oracle, str) or not g.oracle.strip()
+    ]
+    assert not bad, f"gates without oracle SQL: {bad}"
+
+
 def test_entry_returns_rows(spark):
     df = entrymod.entry(spark)
     rows = df.collect()

@@ -8,6 +8,7 @@ import math
 import pytest
 
 from bigdata_lab02_spark.operators import retrieval as rt
+from bigdata_lab02_spark.sources.sinks import journaled
 
 MU = 1_000_000
 
@@ -234,10 +235,11 @@ def test_index_journal_and_consistency_probe(spark, tmp_path):
     assert got == {"journal": "committed", "n_docs": 3, "sum_dl": 5}
 
     # simulate the crash window: journal left 'pending'
-    rt._write_journal(spark, path, "pending")
+    crash = journaled(spark, path)
+    crash.__enter__()
     with pytest.raises(ValueError, match="crashed mid-flight"):
         rt.check_bm25_index(spark, path)
-    rt._write_journal(spark, path, "committed")
+    crash.__exit__(None, None, None)
 
     # deep probe catches a stats/doclen skew the journal can't see
     spark.createDataFrame([(99, 5)], "n_docs long, sum_dl long").write.mode(

@@ -1,11 +1,12 @@
 #!/usr/bin/env python
-"""Capture .explain('formatted') receipts for the r17 optimization round.
+"""Capture .explain('formatted') plan receipts for gates.
 
-Usage: r17_plans.py <suffix> <query> [<query> ...]
-Writes plans/r17/<query>_<suffix>.txt with the formatted physical plan
-of the gate's returned frame (plus the plan-facts header the PLANS.md
-audit extracts). Runs at $SPARK_GRAFT_SF_DIR (default sf0.01 — plan
-shape, not walls, is what these files record)."""
+Usage: plans.py <subdir> <suffix> <query> [<query> ...]
+Writes plans/<subdir>/<query>_<suffix>.txt with the formatted physical
+plan of the gate's returned frame (plus the plan-facts header the
+PLANS.md audit extracts). Runs at $SPARK_GRAFT_SF_DIR (default sf0.01 —
+plan shape, not walls, is what these files record). Set PLANS_NOSPREAD=1
+to capture the plan without the scale-adaptive scan spread."""
 from __future__ import annotations
 
 import os
@@ -21,15 +22,12 @@ import __spark_entry__ as entrymod  # noqa: E402
 
 
 def main() -> None:
-    suffix = sys.argv[1]
-    names = sys.argv[2:]
+    subdir, suffix, *names = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    out_dir = Path(__file__).resolve().parent.parent / "plans" / "r17"
+    out_dir = Path(__file__).resolve().parent.parent / "plans" / subdir
     out_dir.mkdir(parents=True, exist_ok=True)
-    spark = get_spark(app_name="r17_plans")
-    if os.environ.get("R17_NOSPREAD"):
-        # capture the pre-optimization plan shape: disable the
-        # scale-adaptive scan spread for this session
+    spark = get_spark(app_name="plans")
+    if os.environ.get("PLANS_NOSPREAD"):
         entrymod._spread = lambda df: df
     qs = entrymod.queries()
     for name in names:

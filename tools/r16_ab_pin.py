@@ -74,7 +74,7 @@ def arm_hybrid(spark, sf_dir, pin: bool):
 
     docs = entrymod._t(spark, sf_dir, "documents")
     queries = spark.createDataFrame(
-        entrymod._BM25_QUERIES, "query_id int, text string"
+        entrymod._BM25_QUERY_TEXTS, "query_id int, text string"
     )
     lex = rt.bm25_topk(docs, queries, k=20).select(
         "query_id", "doc_id", "rank"

@@ -502,7 +502,7 @@ def main() -> None:
             )
 
             bm_q = spark.createDataFrame(
-                entrymod._BM25_QUERIES, "query_id int, text string"
+                entrymod._BM25_QUERY_TEXTS, "query_id int, text string"
             )
             bpath = f"{dm}/bm25_index"
             t0 = time.time()
