@@ -6,8 +6,13 @@ Reference behavior re-expressed Spark-first (cf. ``KMeans/task2_1.java``,
 
 - The reference round-trips every iteration through HDFS text files and a
   job-conf string. Here the points DataFrame is **cached once**; each
-  iteration is one aggregation job; only the (k × dims / k × vocab-slice)
-  centroid model crosses the driver boundary — the classic MLlib pattern.
+  iteration is one assign plus one update aggregation, and only the
+  (k × dims / k × vocab-slice) centroid model crosses the driver boundary
+  — the classic MLlib pattern. The model is held on the driver between
+  iterations, which is no less scalable than keeping it executor-side:
+  the assign step broadcasts the whole model every iteration anyway.
+  Model tables reach Spark through Arrow (``_model_frame``), never as a
+  Python-RDD-backed frame.
 - Dense assign/update is pure expression math against centroid literals
   (whole-stage codegen, no shuffle beyond the update's groupBy).
 - Sparse (map-vector) assign is an exploded broadcast join: doc nonzeros ×
@@ -28,6 +33,7 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass, field
 
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -181,12 +187,9 @@ def kmeans_dense_centroids(
     if not centroids:
         raise ValueError("no points to initialize centroids from")
     for _ in range(max_iter):
-        cent_df = spark.createDataFrame(
-            [
-                (c, d, v)
-                for c, cv in enumerate(centroids)
-                for d, v in enumerate(cv)
-            ],
+        cent_df = _model_frame(
+            spark,
+            [(c, d, v) for c, cv in enumerate(centroids) for d, v in enumerate(cv)],
             "cluster int, dim int, cval double",
         )
         # squared distance per (point, cluster), rounded before the argmin
@@ -226,17 +229,28 @@ def kmeans_dense_centroids(
 # ---------------------------------------------------------------- sparse
 
 
+def _model_frame(spark, rows: list[tuple], schema: str) -> DataFrame:
+    """A driver-held model table as a DataFrame, built through Arrow from a
+    pandas frame: the JVM reads it as a local table scan. (``createDataFrame``
+    on a Python list parallelizes a Python RDD instead, and every read of
+    that frame starts Python-worker tasks.)"""
+    columns = [field.split()[0] for field in schema.split(",")]
+    return spark.createDataFrame(pd.DataFrame(rows, columns=columns), schema)
+
+
 def _centroid_df(spark, centroids: list[dict[int, float]]) -> DataFrame:
     rows = [
-        (cid, int(t), float(w))
-        for cid, c in enumerate(centroids)
-        for t, w in c.items()
+        (cid, int(t), float(w)) for cid, c in enumerate(centroids) for t, w in c.items()
     ]
-    return spark.createDataFrame(rows, "cluster int, term_id int, cw double")
+    return _model_frame(spark, rows, "cluster int, term_id int, cw double")
+
+
+def _norm2(c: dict[int, float]) -> float:
+    return sum(w * w for w in c.values())
 
 
 def _norm(c: dict[int, float]) -> float:
-    return math.sqrt(sum(w * w for w in c.values()))
+    return math.sqrt(_norm2(c))
 
 
 def _cos_dict(a: dict[int, float], b: dict[int, float]) -> float:
@@ -247,53 +261,34 @@ def _cos_dict(a: dict[int, float], b: dict[int, float]) -> float:
     return dot / (na * nb)
 
 
-def _cent_norms(cent_df: DataFrame) -> DataFrame:
-    """(cluster, cnorm) for a (cluster, term_id, cw) centroid model —
-    computed on the executors so the model never has to visit the driver
-    just to take its norms. Clusters with an empty centroid (no rows)
-    are absent; downstream joins only ever look up clusters that DO have
-    rows (a doc can only dot-product against a non-empty centroid)."""
-    return cent_df.groupBy("cluster").agg(
-        F.sqrt(F.sum(F.col("cw") * F.col("cw"))).alias("cnorm")
-    )
-
-
 def _sparse_assign(
-    docs: DataFrame, cent_df: DataFrame, cnorms: DataFrame, round_dp: int | None
+    docs: DataFrame, centroids: list[dict[int, float]], round_dp: int | None
 ) -> DataFrame:
-    """(doc_id, cluster, cos): argmax cosine via exploded broadcast join
-    (task2_2.java:261-282). Docs sharing no term with a centroid get
-    cos 0 and fall back to cluster 0 — matching the reference's 'first max
-    wins' over an all-zeros score row (task2_2.java:276-279). ``cnorms``
-    is a tiny (cluster, cnorm) DataFrame (broadcast onto the partial
-    dot-products) so the centroid model stays executor-side end to end."""
-    nnz = docs.select(
-        "doc_id", "dnorm", F.explode("vec").alias("term_id", "dw")
-    )
+    """``docs`` (doc_id, vec, dnorm) plus (cluster, cos): argmax cosine via
+    exploded broadcast join (task2_2.java:261-282). Ties go to the lowest
+    cluster id. Docs sharing no term with any centroid get cos 0 and fall
+    back to cluster 0 — matching the reference's 'first max wins' over an
+    all-zeros score row (task2_2.java:276-279). The whole model is
+    broadcast; its k norms ride along as literals."""
+    cnorm = F.array(*[F.lit(_norm(c)) for c in centroids])[F.col("cluster")]
     dots = (
-        nnz.join(F.broadcast(cent_df), "term_id")
+        docs.select("doc_id", "dnorm", F.explode("vec").alias("term_id", "dw"))
+        .join(F.broadcast(_centroid_df(docs.sparkSession, centroids)), "term_id")
         .groupBy("doc_id", "dnorm", "cluster")
         .agg(F.sum(F.col("dw") * F.col("cw")).alias("dot"))
-        .join(F.broadcast(cnorms), "cluster")
     )
-    cos = F.when(
-        (F.col("dnorm") == 0.0) | (F.col("cnorm") == 0.0), F.lit(0.0)
-    ).otherwise(F.col("dot") / (F.col("dnorm") * F.col("cnorm")))
+    cos = F.when((F.col("dnorm") == 0.0) | (cnorm == 0.0), F.lit(0.0)).otherwise(
+        F.col("dot") / (F.col("dnorm") * cnorm)
+    )
     if round_dp is not None:
         cos = F.round(cos, round_dp)
-    scored = dots.select("doc_id", "cluster", cos.alias("cos"))
-    w = Window.partitionBy("doc_id").orderBy(F.desc("cos"), F.asc("cluster"))
+    # min of (-cos, cluster) = max cosine, lowest cluster id on ties
     best = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("doc_id", "cluster", "cos")
+        dots.groupBy("doc_id")
+        .agg(F.min(F.struct((-cos).alias("neg_cos"), "cluster")).alias("b"))
+        .select("doc_id", "b.cluster", (-F.col("b.neg_cos")).alias("cos"))
     )
-    # docs with no dot at all (no term overlap with any centroid) → cluster 0
-    return (
-        docs.select("doc_id")
-        .join(best, "doc_id", "left")
-        .fillna({"cluster": 0, "cos": 0.0})
-    )
+    return docs.join(best, "doc_id", "left").fillna({"cluster": 0, "cos": 0.0})
 
 
 def kmeans_cosine(
@@ -313,30 +308,34 @@ def kmeans_cosine(
     centroid. Also computes per-cluster top-``top_n_terms`` terms by summed
     weight and, when ``compute_loss``, the WCSS loss against the NEW
     centroids, like the reference's update job (task2_2.java:294-356).
-    ``compute_loss=False`` drops the extra job per iteration for callers
-    that only need assignments. ``centroid_round_dp`` quantizes updated
-    centroid weights after each mean — the cross-engine determinism mode
-    the driver gate uses (a SQL oracle re-running the same fixed-init
-    iterations reproduces the rounded model exactly; unrounded sums differ
-    across engines by summation order).
+    ``centroid_round_dp`` quantizes updated centroid weights after each
+    mean — the cross-engine determinism mode the driver gate uses (a SQL
+    oracle re-running the same fixed-init iterations reproduces the
+    rounded model exactly; unrounded sums differ across engines by
+    summation order).
 
-    The centroid model is DataFrame-resident across iterations: assign,
-    mean-update, empty-cluster carry-forward, and the convergence cosines
-    all run on the executors; only k convergence scalars (plus the
-    optional loss scalar) cross the driver boundary per iteration. Each
-    new model is ``localCheckpoint``-ed — truncating lineage so iteration
-    N's plan doesn't embed iterations 1..N-1, and pinning the model so a
-    recompute can't resample. The full model is collected ONCE post-loop
-    for the returned ``KMeansResult.centroids``; at a 10M-term vocabulary
-    drop that final collect and keep consuming the model as a DataFrame."""
-    spark = vectors.sparkSession
-    docs = vectors.select(
-        "doc_id",
-        "vec",
-        F.sqrt(
-            F.aggregate(F.map_values("vec"), F.lit(0.0), lambda a, v: a + v * v)
-        ).alias("dnorm"),
-    ).cache()
+    The centroid model is held on the driver between iterations. That is
+    no less scalable than keeping it executor-side: every assign step
+    broadcasts the whole model anyway. Each iteration is one assign plus
+    one update aggregation, and its only driver round-trip is one collect
+    of the new model's (cluster, term_id, Σw, centroid weight) rows plus k
+    cluster sizes; empty-cluster carry-forward, convergence, the loss and
+    the top terms are computed from those on the driver. Lineage stays one
+    iteration deep because each iteration's plan starts from the cached
+    docs and a fresh model table."""
+    # hash-partitioned on doc_id once, so the assign step's per-doc
+    # aggregations and its docs ⋈ argmax join need no shuffle
+    docs = (
+        vectors.select(
+            "doc_id",
+            "vec",
+            F.sqrt(
+                F.aggregate(F.map_values("vec"), F.lit(0.0), lambda a, v: a + v * v)
+            ).alias("dnorm"),
+        )
+        .repartition("doc_id")
+        .cache()
+    )
 
     if initial_centroids is None:
         init = docs.orderBy(F.rand(seed)).limit(k).collect()
@@ -344,134 +343,104 @@ def kmeans_cosine(
     else:
         centroids = [dict(c) for c in initial_centroids]
         k = len(centroids)
-    cent_df = _centroid_df(spark, centroids).localCheckpoint()
 
     history: list[float] = []
+    terms: dict[int, list[tuple[int, float, float]]] = {}
     it = 0
-    assigned = None
-    sums = None
     for it in range(1, max_iter + 1):
-        if assigned is not None:
-            assigned.unpersist()
-        # cached: reused by the update aggregation and the loss job
-        assigned = _sparse_assign(
-            docs, cent_df, _cent_norms(cent_df), round_dp
-        ).cache()
-
-        # K6 update: mean over cluster members (implicit zeros via /size),
-        # entirely executor-side — Σw per (cluster, term) joined with the
-        # (broadcast) cluster sizes.
-        nnz = docs.join(assigned.select("doc_id", "cluster"), "doc_id").select(
-            "cluster", F.explode("vec").alias("term_id", "w")
+        assigned = _sparse_assign(docs, centroids, round_dp)
+        # K6 update: mean over cluster members (implicit zeros via /size).
+        # Each member contributes its (term_id, w) entries plus one
+        # (null, ‖d‖²) entry, so one aggregation yields Σw per (cluster,
+        # term) and, on the null-term row, the cluster's size and Σ‖d‖².
+        entries = F.concat(
+            F.transform(
+                F.map_entries("vec"),
+                lambda e: F.struct(e["key"].alias("term_id"), e["value"].alias("w")),
+            ),
+            F.array(
+                F.struct(
+                    F.lit(None).cast("int").alias("term_id"),
+                    (F.col("dnorm") * F.col("dnorm")).alias("w"),
+                )
+            ),
         )
-        sums = nnz.groupBy("cluster", "term_id").agg(F.sum("w").alias("sw"))
-        sizes = assigned.groupBy("cluster").agg(F.count("*").alias("size"))
-        cw = F.col("sw") / F.col("size")
+        weight = F.col("w")
+        if centroid_round_dp is not None:
+            # exact decimal sums: a mean landing exactly on a rounding
+            # midpoint then rounds half-up whatever the summation order
+            weight = weight.cast("decimal(38,18)")
+        sums = (
+            assigned.select("cluster", F.inline(entries))
+            .groupBy("cluster", "term_id")
+            .agg(F.sum(weight).alias("sw"), F.count("*").alias("n"))
+        )
+        size = F.max(F.when(F.col("term_id").isNull(), F.col("n"))).over(
+            Window.partitionBy("cluster")
+        )
+        cw = F.col("sw") / size
         if centroid_round_dp is not None:
             cw = F.round(cw, centroid_round_dp)
-        upd = sums.join(F.broadcast(sizes), "cluster").select(
-            "cluster", "term_id", cw.alias("cw")
-        )
-        # keep empty clusters at their old centroid (no members — or only
-        # empty-vector members — produce no sum rows → carry old rows)
-        kept = cent_df.join(
-            upd.select("cluster").distinct(), "cluster", "left_anti"
-        )
-        # localCheckpoint: truncate lineage (else iteration N's plan embeds
-        # 1..N-1) + pin values against recompute. Lazy: it materializes
-        # under the convergence collect below, fusing checkpoint + conv
-        # into one job per iteration.
-        new_cent = upd.unionByName(kept).localCheckpoint(eager=False)
+        rows = sums.select(
+            "cluster",
+            "term_id",
+            "n",
+            F.col("sw").cast("double").alias("sw"),
+            cw.cast("double").alias("cw"),
+        ).collect()
 
-        # convergence: per-cluster cos(old, new) — k scalars are the ONLY
-        # model state that visits the driver each iteration
-        o = cent_df.select("cluster", F.col("term_id").alias("t"), F.col("cw").alias("ow"))
-        n = new_cent.select("cluster", F.col("term_id").alias("t"), F.col("cw").alias("nw"))
-        conv_rows = (
-            o.join(n, ["cluster", "t"], "full")
-            .groupBy("cluster")
-            .agg(
-                F.sum(F.coalesce("ow", F.lit(0.0)) * F.coalesce("nw", F.lit(0.0))).alias("dot"),
-                F.sqrt(F.sum(F.coalesce("ow", F.lit(0.0)) ** 2)).alias("no"),
-                F.sqrt(F.sum(F.coalesce("nw", F.lit(0.0)) ** 2)).alias("nn"),
-            )
-            .select(
-                "cluster",
-                F.when((F.col("no") == 0.0) | (F.col("nn") == 0.0), F.lit(0.0))
-                .otherwise(F.col("dot") / (F.col("no") * F.col("nn")))
-                .alias("cos"),
-            )
-            .collect()
+        members = {
+            r["cluster"]: (r["n"], r["sw"]) for r in rows if r["term_id"] is None
+        }
+        terms = {}
+        # term order fixed so the driver-side norms sum in a fixed order
+        for r in sorted(
+            (r for r in rows if r["term_id"] is not None),
+            key=lambda r: (r["cluster"], r["term_id"]),
+        ):
+            terms.setdefault(r["cluster"], []).append((r["term_id"], r["sw"], r["cw"]))
+        # a cluster without term rows (no members, or only empty-vector
+        # members) keeps its old centroid
+        new_centroids = [
+            {t: w for t, _, w in terms[cid]} if cid in terms else centroids[cid]
+            for cid in range(k)
+        ]
+        # an empty centroid scores cos 0 against itself: it never converges
+        converged = all(
+            _cos_dict(o, n) >= theta for o, n in zip(centroids, new_centroids)
         )
-        cos_by_cluster = {r["cluster"]: r["cos"] for r in conv_rows}
-        # clusters absent from BOTH models (empty since init) score 0,
-        # matching _cos_dict(empty, empty) — they never converge
-        converged = all(cos_by_cluster.get(cid, 0.0) >= theta for cid in range(k))
-
         if compute_loss:
-            # WCSS vs NEW centroids: ‖d‖² + ‖c‖² − 2·d·c (task2_2.java:348-355).
-            # One job: docs with zero centroid overlap left-join to a null
-            # dot (coalesced to 0 → they contribute ‖d‖² + ‖c‖²).
-            cn2 = new_cent.groupBy("cluster").agg(
-                F.sum(F.col("cw") * F.col("cw")).alias("cn2")
-            )
-            dots = (
-                docs.join(assigned.select("doc_id", "cluster"), "doc_id")
-                .select("doc_id", "cluster", F.explode("vec").alias("term_id", "dw"))
-                .join(F.broadcast(new_cent), ["cluster", "term_id"])
-                .groupBy("doc_id")
-                .agg(F.sum(F.col("dw") * F.col("cw")).alias("dot"))
-            )
-            loss = (
-                docs.join(assigned.select("doc_id", "cluster"), "doc_id")
-                .join(F.broadcast(cn2), "cluster", "left")
-                .join(dots, "doc_id", "left")
-                .select(
-                    (
-                        F.col("dnorm") * F.col("dnorm")
-                        + F.coalesce(F.col("cn2"), F.lit(0.0))
-                        - 2 * F.coalesce(F.col("dot"), F.lit(0.0))
-                    ).alias("sq")
+            # WCSS vs NEW centroids, Σ_d ‖d‖² + ‖c‖² − 2·d·c
+            # (task2_2.java:348-355), summed per cluster: Σ_{d∈c} d·c is
+            # Σ_t cw_t·Σw_t over the cluster's term rows
+            history.append(
+                sum(
+                    dn2
+                    + size * _norm2(new_centroids[cid])
+                    - 2 * sum(sw * w for _, sw, w in terms.get(cid, ()))
+                    for cid, (size, dn2) in members.items()
                 )
-                .agg(F.sum("sq"))
-                .collect()[0][0]
-                or 0.0
             )
-            history.append(loss)
-
-        cent_df = new_cent
+        centroids = new_centroids
         if converged:
             break
 
     # per-cluster top terms by SUMMED weight (task2_2.java:319-331), from
-    # the LAST iteration's sums — one k×top_n collect while `assigned` is
-    # still cached (the loop previously rebuilt this list every iteration
-    # and kept only the last)
-    top_terms: list[list[tuple[int, float]]] = [[] for _ in range(k)]
-    if sums is not None:
-        w = Window.partitionBy("cluster").orderBy(F.desc("sw"), F.asc("term_id"))
-        for r in (
-            sums.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= top_n_terms)
-            .orderBy("cluster", "rn")
-            .collect()
-        ):
-            top_terms[r["cluster"]].append((r["term_id"], r["sw"]))
-
-    # result delivery: the model comes back to the driver exactly once.
-    # (A cluster can only be absent here if its INITIAL centroid was empty
-    # — carry-forward keeps every nonempty model row across iterations —
-    # so the empty-dict default reproduces the input faithfully.)
-    centroids = [dict() for _ in range(k)]
-    for r in cent_df.collect():
-        centroids[r["cluster"]][r["term_id"]] = r["cw"]
+    # the last iteration's sums
+    top_terms = [
+        [
+            (t, sw)
+            for t, sw, _ in sorted(terms.get(cid, ()), key=lambda x: (-x[1], x[0]))
+        ][:top_n_terms]
+        for cid in range(k)
+    ]
 
     # Final re-assignment against the RETURNED centroids so the result is
-    # internally consistent (the loop's `assigned` was argmaxed against the
-    # pre-update set; kmeans_euclidean does the same post-loop re-assign).
-    if assigned is not None:
-        assigned.unpersist()
-    assigned = _sparse_assign(docs, cent_df, _cent_norms(cent_df), round_dp)
+    # internally consistent (the loop assigned against the pre-update set;
+    # kmeans_euclidean does the same post-loop re-assign).
+    assigned = _sparse_assign(docs, centroids, round_dp).select(
+        "doc_id", "cluster", "cos"
+    )
     docs.unpersist()
     return KMeansResult(centroids, assigned, history, it, top_terms)
 
@@ -588,9 +557,11 @@ def kmeans_parallel_init(
                 candidates.append(dict(r["vec"]))
 
     # K9 weighting: every doc to nearest candidate by COSINE (task2_3:485-537)
-    cent_df = _centroid_df(spark, candidates)
-    assigned = _sparse_assign(docs, cent_df, _cent_norms(cent_df), round_dp=round_dp)
-    weights = assigned.groupBy("cluster").agg(F.count("*").alias("weight"))
+    weights = (
+        _sparse_assign(docs, candidates, round_dp)
+        .groupBy("cluster")
+        .agg(F.count("*").alias("weight"))
+    )
     return candidates, weights
 
 

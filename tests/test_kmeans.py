@@ -1,14 +1,16 @@
 """K-Means tests: synthetic blobs (exact expectations), reference inputs
 (golden shapes + invariants), K-Means|| pipeline."""
 
+import json
 import math
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
 from bigdata_lab02_spark.operators import kmeans as km
 from bigdata_lab02_spark.sources.delimited import read_points2d, read_sparse_vectors
-from tests.conftest import KMEANS_INPUT
+from tests.conftest import KMEANS_INPUT, TESTDATA
 
 
 # ---------------------------------------------------------------- dense
@@ -170,6 +172,110 @@ def test_cosine_reference_tfidf(spark):
     # every cluster non-empty
     sizes = res.assignments.groupBy("cluster").count().collect()
     assert len(sizes) == 5 and all(r["count"] > 0 for r in sizes)
+
+
+# ------------------------------------------ sparse, sf0.001 gate vectors
+
+
+@pytest.fixture(scope="module")
+def gate_vectors(spark):
+    """The kmeans_fit gate's input: 6-dp TF-IDF vectors of the sf0.001
+    documents table (500 docs)."""
+    import __spark_entry__ as e
+
+    return e._gate_vectors(spark, f"{TESTDATA}/sf0.001")
+
+
+def _first_vectors(vecs, k):
+    return [dict(r["vec"]) for r in vecs.orderBy("doc_id").limit(k).collect()]
+
+
+_NO_OVERLAP_TERM = 10**9  # no document has this term id
+
+
+@pytest.mark.parametrize("case", ["edge_cases", "early_stop"])
+def test_cosine_characterization(gate_vectors, case):
+    """kmeans_cosine against values recorded from the model-on-executors
+    implementation (tests/fixtures/kmeans_cosine_sf0001.json), with the
+    loss on.
+
+    edge_cases: cluster 0 overlaps no document, so the 28 documents with
+    neither term 18 nor term 29 share no term with any centroid and fall
+    back to cluster 0; cluster 2 duplicates cluster 1, loses every tie to
+    it, empties and is carried forward; cluster 3 starts empty and stays
+    empty. Exactly three iterations (theta > 1).
+    early_stop: the gate init with theta 0.9 converges after 2 of at most
+    10 iterations (cosine rounded at 3 dp, so ties are common).
+
+    Loss and top-term weights are sums whose order may change with the
+    plan: compared to 1e-9 relative. Everything else is exact."""
+    if case == "edge_cases":
+        kw = dict(
+            initial_centroids=[
+                {_NO_OVERLAP_TERM: 1.0}, {18: 1.0}, {18: 1.0}, {}, {29: 1.0}
+            ],
+            theta=1.1,
+            max_iter=3,
+            round_dp=6,
+        )
+    else:
+        kw = dict(
+            initial_centroids=_first_vectors(gate_vectors, 5),
+            theta=0.9,
+            max_iter=10,
+            round_dp=3,
+        )
+    want = json.loads(
+        (Path(__file__).parent / "fixtures" / "kmeans_cosine_sf0001.json").read_text()
+    )[case]
+    res = km.kmeans_cosine(gate_vectors, centroid_round_dp=6, compute_loss=True, **kw)
+
+    assert res.iterations == want["iterations"]
+    got = sorted(
+        [r["doc_id"], r["cluster"]]
+        for r in res.assignments.select("doc_id", "cluster").collect()
+    )
+    assert got == want["assignments"]
+    assert [sorted(map(list, c.items())) for c in res.centroids] == want["centroids"]
+    assert [[t for t, _ in c] for c in res.top_terms] == [
+        [t for t, _ in c] for c in want["top_terms"]
+    ]
+    for c_got, c_want in zip(res.top_terms, want["top_terms"]):
+        assert [sw for _, sw in c_got] == pytest.approx(
+            [sw for _, sw in c_want], rel=1e-9
+        )
+    assert res.loss_history == pytest.approx(want["loss_history"], rel=1e-9)
+
+
+def test_cosine_fit_job_count(spark, gate_vectors):
+    """The kmeans_fit gate's fit (k=5, two iterations) runs one assign
+    plus one update aggregation per iteration and collects only the new
+    model: bound its Spark jobs."""
+    sc = spark.sparkContext
+    group = "kmeans-fit-job-count"
+    init = _first_vectors(gate_vectors, 5)
+    sc.setJobGroup(group, "kmeans_cosine on the kmeans_fit gate input")
+    try:
+        km.kmeans_cosine(
+            gate_vectors,
+            k=5,
+            theta=1.1,
+            max_iter=2,
+            round_dp=6,
+            centroid_round_dp=6,
+            initial_centroids=init,
+            compute_loss=False,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs <= 30, (
+        f"kmeans_cosine ran {n_jobs} jobs on the kmeans_fit input; observed "
+        "11 with the driver-held model, 63 when the model stayed on the "
+        "executors (checkpoint, carry-forward and convergence joins, "
+        "post-loop top-terms and model collects)"
+    )
 
 
 def test_kmeans_parallel_tiny(tiny_vectors):

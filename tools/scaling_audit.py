@@ -79,15 +79,15 @@ def main() -> None:
         "- brute-force ANN / near-pair queries: exact baselines; the scale paths",
         "  are `ivf_topk`, `quantized_topk` (4× fewer bytes in flight), and the",
         "  hyperplane/LSH/pigeonhole bucket blocking used by the dedup pair ops.",
-        "- iterative ops (K-Means loop, connected components) localCheckpoint",
-        "  per round; on a real cluster switch to reliable checkpoints.",
-        "- K-Means model state: the sparse-cosine loop holds centroids as a",
-        "  DataFrame across iterations (assign / mean-update / carry-forward /",
-        "  convergence cosines all executor-side); only k convergence scalars",
-        "  visit the driver per iteration, so a 10M-term vocabulary model",
-        "  never becomes driver-sized. The one full-model collect is",
-        "  post-loop result delivery (`KMeansResult.centroids`) — drop it and",
-        "  keep consuming the model DataFrame when the model itself is big.",
+        "- iterative ops (connected components) localCheckpoint per round; on a",
+        "  real cluster switch to reliable checkpoints.",
+        "- K-Means model state: the sparse-cosine loop holds the centroid model",
+        "  on the driver between iterations and broadcasts it whole to each",
+        "  assign step, so the model must fit in driver and executor memory",
+        "  either way. Each iteration collects only the new model (k ×",
+        "  vocab-slice rows plus k cluster sizes); its plan starts from the",
+        "  cached points and a fresh model table, so lineage stays one",
+        "  iteration deep without pins.",
         "- hot keys: AQE skew-join splitting plus `operators/skew.py` salting.",
         "- exact global percentiles (lm_perplexity tercile cutoffs, the",
         "  relational pctl family): the gate/oracle form buffers per-group",
